@@ -11,9 +11,7 @@ Jaccard-verify pipeline recovers exactly those.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
@@ -47,9 +45,11 @@ from ..operators.dedup import (
     simhash_from_shingles,
     simhash_near_dup_pairs,
 )
-from ..session import load_tables
+from ..artifacts import source_key
+from ..session import load_tables, scoped_conf
 from .registry import register
 from .sig_index import (
+    _materialized,
     doc_shingle_frame,
     doc_shingle_sets,
     doc_signature_index,
@@ -672,10 +672,19 @@ def _snb_ranked(part: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     broadcast per-partition offsets cumsum (the only SinglePartition
     frame is the bounded one-row-per-partition counts). Split out so the
     plan-shape test can pin the lineage before _snb_pairs checkpoints
-    it."""
+    it.
+
+    The range repartition is checkpointed so the local ranks and the
+    offsets read ONE row-to-partition assignment: ``loc`` feeds both
+    branches, and two evaluations of the range exchange disagreed on
+    which partition a row lands in (``local[4]`` with carried columns:
+    duplicate and missing ranks, extra q198 pairs —
+    tests/test_partitioning_invariance.py)."""
     sc_parallelism = part.sparkSession.sparkContext.defaultParallelism
-    base = part.select("p_partkey", "p_name", *carry).repartitionByRange(
-        sc_parallelism, "p_name", "p_partkey"
+    base = (
+        part.select("p_partkey", "p_name", *carry)
+        .repartitionByRange(sc_parallelism, "p_name", "p_partkey")
+        .localCheckpoint()
     )
     loc = base.withColumn("pid", F.spark_partition_id())
     wloc = W.partitionBy("pid").orderBy("p_name", "p_partkey")
@@ -1025,14 +1034,9 @@ def q198_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and skew splitting have no corpus-scaled target, while AQE's
     # per-exchange stage materialization charged this 1-row collect
     # TWELVE driver-bound stage-jobs of the q200 profile's 58.
-    aqe_key = "spark.sql.adaptive.enabled"
-    old_aqe = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         # bounded: the 1-row 5-scalar stats frame (see block above)
         srow = u_name.crossJoin(u_size).crossJoin(bt).collect()[0]
-    finally:
-        spark.conf.set(aqe_key, old_aqe)
     u_lit = {f: _ilit(srow[f"u_{f}_num"]) for f in _FS_AGREE}
     n_lit = _ilit(srow["n_rows"])
     weighted = pairs
@@ -1419,10 +1423,11 @@ def q165_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-grain graphs); a name graph is not one. Catalog rows then join
     the finished |vocab|-row name→entity map once, by name, broadcast."""
     part = load_tables(spark, sf_dir, ["part"])["part"]
+    pairs = _fuzzy_name_pairs(part).select("n1", "n2")
     # bounded: the edit-distance pair list lives at the name-VOCABULARY
     # grain (q112's banded domain self-join output — the broadcast size
     # class), never the catalog grain
-    edges = _fuzzy_name_pairs(part).select("n1", "n2").collect()
+    edges = pairs.limit(ENTITY_EDGE_CAP + 1).collect()
     if len(edges) > ENTITY_EDGE_CAP:
         # fail loudly at the premise, not as an opaque driver OOM: the
         # driver-side union-find exists BECAUSE the name vocabulary is
@@ -1430,8 +1435,8 @@ def q165_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vocabulary where the banded pair list outgrows the broadcast
         # size class needs the distributed closure instead (r15 guard)
         raise ValueError(
-            f"q165 name-pair graph has {len(edges)} edges > cap "
-            f"{ENTITY_EDGE_CAP}: the name vocabulary is not domain-"
+            f"q165 name-pair graph has more than {ENTITY_EDGE_CAP} "
+            "edges: the name vocabulary is not domain-"
             "small, so the collected union-find premise does not hold "
             "— close this graph with connected_components_star"
         )
@@ -1932,9 +1937,8 @@ _CDC_INDEX_VERSION = "v1:4gram-md5-0-prefix"
 
 
 def _cdc_index_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    st = os.stat(src)
-    return f"{_CDC_INDEX_VERSION}|{src}|{st.st_size}|{int(st.st_mtime)}"
+    src = os.path.join(sf_dir, "documents.parquet")
+    return f"{_CDC_INDEX_VERSION}|{source_key(src)}"
 
 
 def cdc_chunk_index(
@@ -1951,26 +1955,17 @@ def cdc_chunk_index(
     stale index; SPARK_GRAFT_CDC_INDEX=0 bypasses materialization
     (every query recomputes the in-plan chunk frame — the referee mode
     used by plan tests and build-cost probes)."""
-    if os.environ.get("SPARK_GRAFT_CDC_INDEX", "1") == "0":
+
+    def frame() -> DataFrame:
         return _cdc_chunk_frame(
             _docs(spark, sf_dir), with_len=True, carry=("source",)
         )
-    fp = _cdc_index_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(CDC_INDEX_DIR, key)
-    if rebuild or not os.path.isdir(dest):
-        frame = _cdc_chunk_frame(
-            _docs(spark, sf_dir), with_len=True, carry=("source",)
-        )
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        frame.write.mode("overwrite").parquet(tmp)
-        try:
-            if rebuild and os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return spark.read.parquet(dest)
+
+    if os.environ.get("SPARK_GRAFT_CDC_INDEX", "1") == "0":
+        return frame()
+    return _materialized(
+        spark, CDC_INDEX_DIR, _cdc_index_fingerprint(sf_dir), frame, rebuild
+    )
 
 
 def cdc_delta_landing(
@@ -2004,16 +1999,17 @@ def cdc_delta_landing(
 
     if os.environ.get("SPARK_GRAFT_CDC_INDEX", "1") == "0":
         return frame()
-    from .sig_index import _materialized
-
     fp = (
         f"{_cdc_index_fingerprint(sf_dir)}"
         f"|delta-mod{NEW_MOD}r{NEW_REM}-pb{cdc_landed_prefix_chars()}"
     )
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(CDC_INDEX_DIR, f"delta_{key}")
     return _materialized(
-        spark, dest, frame, rebuild, partition_by=CDC_LANDED_PART_COL
+        spark,
+        CDC_INDEX_DIR,
+        fp,
+        frame,
+        rebuild,
+        partition_by=CDC_LANDED_PART_COL,
     )
 
 

@@ -28,6 +28,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..artifacts import publish_once, source_key
+from .sig_index import _materialized
+
 EMB_INDEX_DIR = os.environ.get(
     "SPARK_GRAFT_EMB_INDEX_DIR", "/tmp/spark_graft_emb_index"
 )
@@ -47,10 +50,12 @@ def _version() -> str:
     )
 
 
+def _fingerprint(sf_dir: str, version: str) -> str:
+    return f"{version}|{source_key(os.path.join(sf_dir, 'embeddings.parquet'))}"
+
+
 def _index_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+    return _fingerprint(sf_dir, _version())
 
 
 def _enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,15 +104,12 @@ def emb_enriched(
     lineage (referee mode)."""
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return _enriched_frame(spark, sf_dir)
-    # one write-once/tmp-rename implementation for every index artifact
-    # (r13 review: three hand-copies of the race rule)
-    from .sig_index import _materialized
-
-    fp = _index_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, key)
     return _materialized(
-        spark, dest, lambda: _enriched_frame(spark, sf_dir), rebuild
+        spark,
+        EMB_INDEX_DIR,
+        _index_fingerprint(sf_dir),
+        lambda: _enriched_frame(spark, sf_dir),
+        rebuild,
     )
 
 
@@ -147,9 +149,7 @@ def _centroid_version() -> str:
 
 
 def _centroid_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_centroid_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+    return _fingerprint(sf_dir, _centroid_version())
 
 
 def _centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,13 +174,12 @@ def frozen_centroids(
     delta-assignment family scores against; see the block comment."""
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return _centroid_frame(spark, sf_dir)
-    from .sig_index import _materialized
-
-    fp = _centroid_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"cent_{key}")
     return _materialized(
-        spark, dest, lambda: _centroid_frame(spark, sf_dir), rebuild
+        spark,
+        EMB_INDEX_DIR,
+        _centroid_fingerprint(sf_dir),
+        lambda: _centroid_frame(spark, sf_dir),
+        rebuild,
     )
 
 
@@ -215,9 +214,7 @@ def _refresh_version() -> str:
 
 
 def _refresh_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_refresh_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+    return _fingerprint(sf_dir, _refresh_version())
 
 
 def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,11 +234,7 @@ def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _centgen_root(sf_dir: str) -> str:
     """Per-corpus generation store: g_<trainkey> dirs + CURRENT pointer."""
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    corpus = hashlib.md5(
-        f"{src}|{st.st_size}|{int(st.st_mtime)}".encode()
-    ).hexdigest()[:16]
+    corpus = source_key(os.path.join(sf_dir, "embeddings.parquet"))
     return os.path.join(EMB_INDEX_DIR, f"centgen_{corpus}")
 
 
@@ -268,19 +261,10 @@ def _swap_pointer(root: str, gen_name: str) -> None:
 
 
 def _land_generation(root: str, gen_name: str, frame_fn) -> None:
-    """Write a generation directory via the tmp-rename race rule (the
-    _materialized discipline): the finished dir appears atomically."""
-    import shutil
-
-    dest = os.path.join(root, gen_name)
-    if os.path.isdir(dest):
-        return
-    tmp = f"{dest}.tmp.{os.getpid()}"
-    frame_fn().write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
+    """Publish a generation directory whole (artifacts.publish_once)."""
+    publish_once(
+        os.path.join(root, gen_name), lambda tmp: frame_fn().write.parquet(tmp)
+    )
 
 
 def refresh_centroids(
@@ -346,7 +330,7 @@ def refresh_centroids(
     # swap and the delete would otherwise leak the superseded generation
     # forever — the idempotent path never revisited it. CURRENT points
     # at full_gen here, so anything else g_* (including orphaned
-    # .tmp.<pid> dirs from crashed landings) is garbage by contract.
+    # .tmp.* dirs from crashed landings) is garbage by contract.
     for entry in os.listdir(root):
         if entry.startswith("g_") and entry != full_gen:
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
@@ -386,12 +370,8 @@ def base_assignments(
 
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return frame()
-    from .sig_index import _materialized
-
     fp = f"{_centroid_fingerprint(sf_dir)}|basea"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"basea_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    return _materialized(spark, EMB_INDEX_DIR, fp, frame, rebuild)
 
 
 def emb_delta_landing(
@@ -411,12 +391,8 @@ def emb_delta_landing(
 
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return frame()
-    from .sig_index import _materialized
-
     fp = f"{_centroid_fingerprint(sf_dir)}|deltalab"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"deltalab_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    return _materialized(spark, EMB_INDEX_DIR, fp, frame, rebuild)
 
 
 # --- refresh-apply artifacts (q231) ------------------------------------------
@@ -451,12 +427,8 @@ def full_assignments(
 
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return frame()
-    from .sig_index import _materialized
-
     fp = f"{_centroid_fingerprint(sf_dir)}|fulla"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"fulla_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    return _materialized(spark, EMB_INDEX_DIR, fp, frame, rebuild)
 
 
 def reassignment_delta(
@@ -494,14 +466,10 @@ def reassignment_delta(
 
     if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
         return frame()
-    from .sig_index import _materialized
-
     # BOTH lineages fold in (r14 review finding): the old side depends
     # on the frozen-centroid fingerprint (which versions NEW_MOD/NEW_REM
     # — a changed base split changes every old_cluster label), the new
     # side on the refresh fingerprint; keying on the refresh side alone
     # could serve a stale delta after a split-constant change
     fp = f"{_centroid_fingerprint(sf_dir)}|{_refresh_fingerprint(sf_dir)}|redelta"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"redelta_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    return _materialized(spark, EMB_INDEX_DIR, fp, frame, rebuild)

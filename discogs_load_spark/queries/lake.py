@@ -14,9 +14,10 @@ Schema notes (the production-relevant part):
   is single-line so the read side stays splittable (``multiLine`` off —
   the option that turns a 100 TB CSV read single-task-per-file is the
   first thing to audit in a slow CSV job).
-- Round-trip outputs are cached per fixture dir (same _SUCCESS protocol
-  as q88's stream re-materialization) so bench warm runs measure the
-  read+aggregate, not the rewrite.
+- Round-trip outputs are write-once artifacts keyed by the source
+  table's generation (artifacts.publish_once, the protocol q88's stream
+  sources use too), so bench warm runs measure the read+aggregate, not
+  the rewrite, and a crashed or concurrent write is never served.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import publish_once, source_key
 from ..session import load_tables
 from .registry import register
 
@@ -41,11 +43,11 @@ _DOC_SCHEMA = T.StructType(
 )
 
 
-def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    # key includes the source mtime: a regenerated fixture invalidates the
-    # cached round-trip instead of serving stale rows against a fresh oracle
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    key = f"{sf_dir.strip('/').replace('/', '_')}_{mtime}"
+def _roundtrip_dir(sf_dir: str, fmt: str, table: str = "documents") -> str:
+    # keyed by the source table's generation: a regenerated fixture
+    # invalidates the cached round-trip instead of serving stale rows
+    # against a fresh oracle
+    key = source_key(os.path.join(sf_dir, f"{table}.parquet"))
     return os.path.join(tempfile.gettempdir(), f"lake_{fmt}_{key}")
 
 
@@ -81,21 +83,15 @@ def q101_interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove both interchange paths are lossless."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
 
-    legs = []
-    for fmt in ("json", "csv"):
-        out = _roundtrip_dir(sf_dir, fmt)
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            w = docs.write.mode("overwrite")
-            if fmt == "csv":
-                w.option("header", "true").option("quoteAll", "true").csv(out)
-            else:
-                w.json(out)
-        r = spark.read.schema(_DOC_SCHEMA)
-        back = (
-            r.option("header", "true").csv(out) if fmt == "csv" else r.json(out)
-        )
-        legs.append(_fingerprint(back, fmt))
-    return legs[0].unionByName(legs[1])
+    js = publish_once(_roundtrip_dir(sf_dir, "json"), docs.write.json)
+    csv = publish_once(
+        _roundtrip_dir(sf_dir, "csv"),
+        docs.write.option("header", "true").option("quoteAll", "true").csv,
+    )
+    r = spark.read.schema(_DOC_SCHEMA)
+    return _fingerprint(r.json(js), "json").unionByName(
+        _fingerprint(r.option("header", "true").csv(csv), "csv")
+    )
 
 
 @register(
@@ -127,18 +123,12 @@ def q111_partitioned_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dec_sum
 
     events = load_tables(spark, sf_dir, ["events"])["events"]
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "events.parquet")))
-    lake = os.path.join(
-        tempfile.gettempdir(),
-        f"lake_part_{sf_dir.strip('/').replace('/', '_')}_{mtime}",
+    lake = publish_once(
+        _roundtrip_dir(sf_dir, "part", "events"),
+        events.withColumn("event_date", F.to_date("ts"))
+        .write.partitionBy("event_date")
+        .parquet,
     )
-    if not os.path.exists(os.path.join(lake, "_SUCCESS")):
-        (
-            events.withColumn("event_date", F.to_date("ts"))
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(lake)
-        )
     back = spark.read.parquet(lake).filter(
         F.col("event_date") == F.lit("2024-01-15").cast("date")
     )
@@ -444,9 +434,7 @@ def q162_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Avro is not bundled in this environment — the external
     spark-avro module would slot into the same fingerprint harness.)"""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    out = _roundtrip_dir(sf_dir, "orc")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        docs.write.mode("overwrite").orc(out)
+    out = publish_once(_roundtrip_dir(sf_dir, "orc"), docs.write.orc)
     return _fingerprint(spark.read.orc(out), "orc")
 
 
@@ -542,16 +530,18 @@ def q174_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable shuffle. Plain v1/v2 subdirs (no '=' in names)
     keep partition-column inference out of the schema."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    out = _roundtrip_dir(sf_dir, "evo")
-    if not os.path.exists(os.path.join(out, "v2", "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "lang", "n_chars"
         )
         v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", "lang", "n_chars", "source"
         )
-        v1.write.mode("overwrite").parquet(os.path.join(out, "v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(out, "v2"))
+        v1.write.parquet(os.path.join(tmp, "v1"))
+        v2.write.parquet(os.path.join(tmp, "v2"))
+
+    out = publish_once(_roundtrip_dir(sf_dir, "evo"), write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out, "v1"), os.path.join(out, "v2")
     )
@@ -620,23 +610,17 @@ def q223_cdc_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival grain — so partitionBy writes one file per (slice x
     touched bucket), ~slices x buckets small files (the pathology; an
     explicit slice count because AQE's post-shuffle coalescing would
-    otherwise hide it at fixture scale). Both artifacts cache per
-    fixture mtime (the _roundtrip_dir rule). Scale shape: compaction
+    otherwise hide it at fixture scale). Both layouts are published
+    as one write-once artifact per documents generation (the
+    _roundtrip_dir rule). Scale shape: compaction
     is one read + one hash exchange on the partition column + one
     write, no wide aggregate; at 100 TB it runs per-partition-group on
     the q164 plan's grouping rather than whole-table."""
     from .dedup import cdc_chunk_index
 
-    frag = _roundtrip_dir(sf_dir, "cdcfrag")
-    comp = _roundtrip_dir(sf_dir, "cdccomp")
-    global _LAST_COMPACTION_DIRS
-    _LAST_COMPACTION_DIRS = (frag, comp)
     schema = "chunk_hash string, pb string"
-    # guard on BOTH artifacts (ADVICE r12): a /tmp reaper that removes the
-    # fragmented dir while the compacted one survives would otherwise
-    # leave _LAST_COMPACTION_DIRS pointing at a missing frag dir and fail
-    # the file-count test on stale-cache state rather than a regression
-    if not (os.path.isdir(comp) and os.path.isdir(frag)):
+
+    def write(tmp: str) -> None:
         chunks = (
             cdc_chunk_index(spark, sf_dir)
             .select("chunk_hash")
@@ -651,16 +635,21 @@ def q223_cdc_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             # A derived key keeps the explicit (non-coalescable) exchange.
             .repartition(COMPACTION_ARRIVAL_SLICES, F.xxhash64("chunk_hash"))
         )
-        chunks.write.mode("overwrite").partitionBy("pb").parquet(frag)
+        frag = os.path.join(tmp, "frag")
+        chunks.write.partitionBy("pb").parquet(frag)
         # the compaction rewrite under test
         (
             spark.read.schema(schema)
             .parquet(frag)
             .repartition("pb")
-            .write.mode("overwrite")
-            .partitionBy("pb")
-            .parquet(comp)
+            .write.partitionBy("pb")
+            .parquet(os.path.join(tmp, "comp"))
         )
+
+    out = publish_once(_roundtrip_dir(sf_dir, "cdccompaction"), write)
+    frag, comp = os.path.join(out, "frag"), os.path.join(out, "comp")
+    global _LAST_COMPACTION_DIRS
+    _LAST_COMPACTION_DIRS = (frag, comp)
     idx = spark.read.schema(schema).parquet(comp)
     return idx.groupBy(
         F.substring("chunk_hash", 1, 1).alias("bucket")

@@ -101,10 +101,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..artifacts import publish_once, source_key
 from ..functions.textfns import norm_sql, shingles_sql, tokens_sql
 from ..operators.dedup import DEFAULT_N_HASHES
 from ..session import load_tables
@@ -249,42 +249,36 @@ def _index_fingerprint(sf_dir: str, hashed: bool | None = None) -> str:
     if hashed is None:
         hashed = hashed_mode()
     version = _SIG_INDEX_VERSION_HASHED if hashed else _SIG_INDEX_VERSION
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    st = os.stat(src)
-    return (
-        f"{version}-tf{_semantics_hash()}"
-        f"|{src}|{st.st_size}|{int(st.st_mtime)}"
-    )
+    src = os.path.join(sf_dir, "documents.parquet")
+    return f"{version}-tf{_semantics_hash()}|{source_key(src)}"
 
 
 def _materialized(
     spark: SparkSession,
-    dest: str,
+    root: str,
+    fp: str,
     frame_fn,
     rebuild: bool,
     partition_by: str | None = None,
 ) -> DataFrame:
-    """Write-once parquet materialization with the tmp-rename race rule
-    shared by every index builder in this module. ``partition_by``
-    lands the artifact directory-partitioned, one file per bucket (the
-    q219/q218 landed layout: repartition on the directory column so
-    partitionBy writes one file per bucket, not tasks x buckets)."""
-    if rebuild or not os.path.isdir(dest):
+    """Read the write-once parquet artifact for fingerprint ``fp`` under
+    ``root``, building it from ``frame_fn()`` first if needed
+    (artifacts.publish_once) — the one materialization path of every
+    index builder. ``partition_by`` lands the artifact
+    directory-partitioned, one file per bucket (the q219/q218 landed
+    layout: repartition on the directory column so partitionBy writes
+    one file per bucket, not tasks x buckets)."""
+
+    def write(tmp: str) -> None:
         frame = frame_fn()
-        tmp = f"{dest}.tmp.{os.getpid()}"
         if partition_by:
-            frame.repartition(partition_by).write.mode(
-                "overwrite"
-            ).partitionBy(partition_by).parquet(tmp)
+            frame = frame.repartition(partition_by)
+            frame.write.partitionBy(partition_by).parquet(tmp)
         else:
-            frame.write.mode("overwrite").parquet(tmp)
-        try:
-            if rebuild and os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return spark.read.parquet(dest)
+            frame.write.parquet(tmp)
+
+    dest = os.path.join(root, hashlib.md5(fp.encode()).hexdigest()[:16])
+    return spark.read.parquet(publish_once(dest, write, rebuild))
 
 
 def doc_signature_index(
@@ -302,12 +296,10 @@ def doc_signature_index(
     if os.environ.get("SPARK_GRAFT_SIG_INDEX", "1") == "0":
         frame = sig_frame(_docs(spark, sf_dir), hashed=hashed)
         return with_derived_index_cols(frame) if hashed else frame
-    fp = _index_fingerprint(sf_dir, hashed)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, key)
     df = _materialized(
         spark,
-        dest,
+        SIG_INDEX_DIR,
+        _index_fingerprint(sf_dir, hashed),
         lambda: sig_frame(_docs(spark, sf_dir), hashed=hashed),
         rebuild,
     )
@@ -354,10 +346,13 @@ def sig_delta_landing(
         f"{_index_fingerprint(sf_dir, hashed)}"
         f"|delta-mod{NEW_MOD}r{NEW_REM}"
     )
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, f"delta_{key}")
     df = _materialized(
-        spark, dest, delta_frame, rebuild, partition_by=SIG_DELTA_PART_COL
+        spark,
+        SIG_INDEX_DIR,
+        fp,
+        delta_frame,
+        rebuild,
+        partition_by=SIG_DELTA_PART_COL,
     )
     return with_derived_index_cols(df) if hashed else df
 
@@ -459,9 +454,10 @@ def doc_prefix_rank_index(
         return _prefix_rank_frame(spark, sf_dir)
     # _index_fingerprint is mode-aware, so the hashed and string rank
     # artifacts cache separately too
-    fp = _index_fingerprint(sf_dir) + "|prefixrank-v1"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, key)
     return _materialized(
-        spark, dest, lambda: _prefix_rank_frame(spark, sf_dir), rebuild
+        spark,
+        SIG_INDEX_DIR,
+        _index_fingerprint(sf_dir) + "|prefixrank-v1",
+        lambda: _prefix_rank_frame(spark, sf_dir),
+        rebuild,
     )

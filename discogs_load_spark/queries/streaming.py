@@ -18,15 +18,15 @@ plumbing only — production composes writeStream.foreachBatch → JDBC/parquet
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..artifacts import publish_once, source_key
 from ..functions.numeric import dec_sum, dec_sum_sql
-from ..session import load_tables
+from ..session import load_tables, scoped_conf
 from ..streaming.ops import read_event_stream
 from .registry import register
 
@@ -48,7 +48,6 @@ STREAM_DRAIN_SPLIT_BYTES = str(1024 * 1024)
 STREAM_DRAIN_OPEN_COST = str(256 * 1024)
 
 
-@contextlib.contextmanager
 def _stream_drain_conf(spark: SparkSession, no_data_batches: bool = True):
     """Scoped shuffle-partition + input-split override for bounded
     streaming drains.
@@ -78,41 +77,31 @@ def _stream_drain_conf(spark: SparkSession, no_data_batches: bool = True):
     small row groups (STREAM_SOURCE_ROW_GROUP_BYTES above) so per-batch
     map stages parallelize past the file count.
     """
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    aqe_key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
-    old_nodata = spark.conf.get(nodata_key)
-    old_aqe = spark.conf.get(aqe_key)
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_DRAIN_PARTITIONS)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", STREAM_DRAIN_SPLIT_BYTES)
-    spark.conf.set("spark.sql.files.openCostInBytes", STREAM_DRAIN_OPEN_COST)
-    # AQE OFF inside the drain scope (r15): a foreachBatch body is a fresh
-    # BATCH query per micro-batch, so AQE re-plans it per batch and
-    # materializes every shuffle as its own stage-job — the q226 drain
-    # profile read 36 jobs / 2.6 s of job time inside a 6.7 s wall, the
-    # other 4.1 s being driver gaps between those tiny jobs. A micro-batch's
-    # data volume is bounded by TRIGGER SIZING (maxFilesPerTrigger), not by
-    # the corpus, so runtime re-optimization has nothing to adapt to at any
-    # deployment scale: partition counts are pinned by the scoped
-    # shuffle-partition knob above, and the per-batch join keys (md5-prefix
-    # hashes, LSH buckets) are uniform by construction, so skew-splitting
-    # has no target either. The stateful drains (q88/q110/q114/q115/q116)
-    # already run with AQE off internally (streaming queries don't support
-    # it); this makes the foreachBatch bodies match. Batch-mode consumers
-    # outside the drain scope keep AQE on.
-    spark.conf.set(aqe_key, "false")
+    conf = {
+        "spark.sql.shuffle.partitions": STREAM_DRAIN_PARTITIONS,
+        "spark.sql.files.maxPartitionBytes": STREAM_DRAIN_SPLIT_BYTES,
+        "spark.sql.files.openCostInBytes": STREAM_DRAIN_OPEN_COST,
+        # AQE OFF inside the drain scope (r15): a foreachBatch body is a
+        # fresh BATCH query per micro-batch, so AQE re-plans it per
+        # batch and materializes every shuffle as its own stage-job —
+        # the q226 drain profile read 36 jobs / 2.6 s of job time inside
+        # a 6.7 s wall, the other 4.1 s being driver gaps between those
+        # tiny jobs. A micro-batch's data volume is bounded by TRIGGER
+        # SIZING (maxFilesPerTrigger), not by the corpus, so runtime re-
+        # optimization has nothing to adapt to at any deployment scale:
+        # partition counts are pinned by the scoped shuffle-partition
+        # knob above, and the per-batch join keys (md5-prefix hashes,
+        # LSH buckets) are uniform by construction, so skew-splitting
+        # has no target either. The stateful drains
+        # (q88/q110/q114/q115/q116) already run with AQE off internally
+        # (streaming queries don't support it); this makes the
+        # foreachBatch bodies match. Batch-mode consumers outside the
+        # drain scope keep AQE on.
+        "spark.sql.adaptive.enabled": "false",
+    }
     if not no_data_batches:
-        spark.conf.set(nodata_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_split)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
-        spark.conf.set(nodata_key, old_nodata)
-        spark.conf.set(aqe_key, old_aqe)
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    return scoped_conf(spark, conf)
 
 
 def _source_writer(df: DataFrame):
@@ -258,62 +247,57 @@ class _GenerationLanding:
         shutil.rmtree(old, ignore_errors=True)  # bound disk to ~1 gen
 
 
-def prewarm_stream_sources(spark: SparkSession, sf_dir: str) -> None:
-    """Build the fixture-keyed /tmp stream-source copies every streaming
-    query reads (events single/duplicated, the 12-file docs source shared
-    by q218/q219/q224, the 12-file new-vector source shared by q220/q226)
-    WITHOUT running any drain. bench.py calls this once per tier outside
-    the per-query timed windows — the same out-of-window treatment the
-    ingest artifacts already get — so a query's committed row measures
-    the drain, not a one-time parquet copy of its input (the copies are
-    harness plumbing standing in for the always-there kafka/landing
-    source a production stream reads). Each builder is the exact
-    code+key its query uses; a later in-query check then hits the cache."""
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(
-        tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
-    dup = os.path.join(
-        tempfile.gettempdir(), f"stream_events_x2_{_cache_key(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(dup, "_DUP_DONE")):
-        _source_writer(events).mode("overwrite").parquet(dup)
-        os.remove(os.path.join(dup, "_SUCCESS"))
-        _source_writer(events).mode("append").parquet(dup)
-        open(os.path.join(dup, "_DUP_DONE"), "w").close()
-    nf = stream_source_files()
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    dsrc = os.path.join(
-        tempfile.gettempdir(), f"stream_docs{nf}_{_cache_key(sf_dir, 'documents')}"
-    )
-    if not os.path.exists(os.path.join(dsrc, "_SUCCESS")):
-        _source_writer(docs.repartition(nf)).mode("overwrite").parquet(dsrc)
-    from .dedup import NEW_MOD, NEW_REM
+# The fixture-keyed stream sources the streaming queries drain: the
+# events table (``events``; written twice over for q110's in-flight
+# dedup: ``events_x2``), the 12-file documents source shared by
+# q218/q219/q224 (``docs``) and the 12-file held-out new-vector source
+# shared by q220/q226 (``newvecs``).
+STREAM_SOURCE_KINDS = ("events", "events_x2", "docs", "newvecs")
 
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    vsrc = os.path.join(
+
+def _stream_source(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """Path of the ``kind`` stream source for ``sf_dir``, built on first
+    use through _source_writer and published whole (artifacts.py).
+
+    The copies exist because the raw fixture parquet is
+    TIMESTAMP(NANOS), which the streaming file source cannot read, and
+    because the index maintainers need a fixed file count so every
+    drain spans several micro-batches. The key is the fixture table's
+    source_key plus the source layout (row-group size, file count): a
+    regenerated fixture or a layout change never serves an old copy."""
+    table = {"docs": "documents", "newvecs": "embeddings"}.get(kind, "events")
+    nf = stream_source_files() if table != "events" else None
+    dest = os.path.join(
         tempfile.gettempdir(),
-        f"stream_newvecs{nf}_{_cache_key(sf_dir, 'embeddings')}",
+        f"stream_{kind}{nf or ''}"
+        f"_{source_key(os.path.join(sf_dir, f'{table}.parquet'))}"
+        f"_rg{STREAM_SOURCE_ROW_GROUP_BYTES}",
     )
-    if not os.path.exists(os.path.join(vsrc, "_SUCCESS")):
-        _source_writer(
-            emb.filter((F.col("vec_id") % NEW_MOD) == NEW_REM).repartition(nf)
-        ).mode("overwrite").parquet(vsrc)
+
+    def write(tmp: str) -> None:
+        df = load_tables(spark, sf_dir, [table])[table]
+        if kind == "newvecs":
+            from .dedup import NEW_MOD, NEW_REM
+
+            df = df.filter((F.col("vec_id") % NEW_MOD) == NEW_REM)
+        if nf:
+            df = df.repartition(nf)
+        _source_writer(df).parquet(tmp)
+        if kind == "events_x2":
+            _source_writer(df).mode("append").parquet(tmp)
+
+    return publish_once(dest, write)
 
 
-def _cache_key(sf_dir: str, table: str = "events") -> str:
-    """/tmp cache key for fixture-derived copies: path + source mtime, so a
-    regenerated fixture (new round, new seed) can never serve a stale copy
-    that silently diverges from the oracle's view of the same table."""
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet")))
-    # rg suffix: the source-layout version (row-group sizing) — a layout
-    # change must invalidate copies built under the old writer
-    return (
-        f"{sf_dir.strip('/').replace('/', '_')}_{mtime}"
-        f"_rg{STREAM_SOURCE_ROW_GROUP_BYTES}"
-    )
+def prewarm_stream_sources(spark: SparkSession, sf_dir: str) -> None:
+    """Build every stream source WITHOUT running any drain. bench.py
+    calls this once per tier outside the per-query timed windows — the
+    same out-of-window treatment the ingest artifacts already get — so a
+    query's committed row measures the drain, not a one-time parquet
+    copy of its input (the copies are harness plumbing standing in for
+    the always-there kafka/landing source a production stream reads)."""
+    for kind in STREAM_SOURCE_KINDS:
+        _stream_source(spark, sf_dir, kind)
 
 
 @register(
@@ -332,13 +316,7 @@ def q88_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dual of q40: tumbling 1h counts + exact value sums,
     computed by the streaming runtime (not a batch rewrite) and drained to
     completion so the answer is deterministic."""
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    # re-materialize at microsecond precision: the raw fixture parquet is
-    # TIMESTAMP(NANOS), which the streaming file source cannot read.
-    # Cached per fixture dir so repeat calls (bench warm runs) skip the write.
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     stream = read_event_stream(spark, src)
     agg = (
@@ -387,10 +365,7 @@ def q92_streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFra
     read-back aggregation proves no rows were lost or duplicated in
     transit (count + id range per event type, all integers — exact).
     """
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     out = tempfile.mkdtemp(prefix="q92_lake_")
 
@@ -444,16 +419,7 @@ def q110_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     may arrive in DIFFERENT micro-batches (file order is not promised),
     which is exactly what the unbounded state handles deterministically.
     """
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(
-        tempfile.gettempdir(), f"stream_events_x2_{_cache_key(sf_dir)}"
-    )
-    marker = os.path.join(src, "_DUP_DONE")
-    if not os.path.exists(marker):
-        _source_writer(events).mode("overwrite").parquet(src)
-        os.remove(os.path.join(src, "_SUCCESS"))
-        _source_writer(events).mode("append").parquet(src)
-        open(marker, "w").close()
+    src = _stream_source(spark, sf_dir, "events_x2")
 
     deduped = read_event_stream(spark, src).dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(
@@ -515,10 +481,7 @@ def q114_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last event + gap). Exact value sums via the decimal recipe — a raw
     streaming SUM(double) adds in arrival order and would be
     hash-unstable."""
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     agg = (
         read_event_stream(spark, src)
@@ -577,10 +540,7 @@ def q115_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields are monotone), which must equal the batch GROUP BY."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -650,10 +610,7 @@ def q116_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation anywhere, so the row set is trivially deterministic."""
     from ..streaming.ops import purchase_click_join
 
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     purchases = read_event_stream(spark, src).filter(
         F.col("event_type") == "purchase"
@@ -697,11 +654,8 @@ def q127_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently dropping). Aggregated by market segment with the decimal-sum
     recipe so the drained result is hash-stable against the batch oracle.
     """
-    tables = load_tables(spark, sf_dir, ["events", "customer"])
-    events, customer = tables["events"], tables["customer"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    customer = load_tables(spark, sf_dir, ["customer"])["customer"]
+    src = _stream_source(spark, sf_dir, "events")
 
     enriched = read_event_stream(spark, src).join(
         F.broadcast(customer.select("c_custkey", "c_mktsegment")),
@@ -755,10 +709,7 @@ def q161_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB/day: per batch the ledger gains |event_type| rows; the
     view query reads partials only — never the event history."""
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     ledger = tempfile.mkdtemp(prefix="q161_ledger_")
 
@@ -881,11 +832,7 @@ def q190_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketch import cms_fanout, cms_point_query
 
     events = load_tables(spark, sf_dir, ["events"])["events"]
-    src = os.path.join(
-        tempfile.gettempdir(), f"stream_events_{_cache_key(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(events).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "events")
 
     ledger = tempfile.mkdtemp(prefix="q190_cms_ledger_")
 
@@ -991,13 +938,7 @@ def q218_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q164 plan's grouping rather than whole-table). The rollup output is
     layout-invariant: same oracle, same columns as the flat landing."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    nf = stream_source_files()
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_docs{nf}_{_cache_key(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(docs.repartition(nf)).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "docs")
 
     from .sig_index import hashed_mode, sig_frame, with_derived_index_cols
 
@@ -1157,13 +1098,7 @@ def q219_streaming_cdc_index_maintenance(
     # (OPTIMIZATION_r14.md). Batch sizing is the standard streaming
     # throughput knob (maxFilesPerTrigger); the rollup output is
     # batch-count-invariant by the exactly-once twin-count construction.
-    nf = stream_source_files()
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_docs{nf}_{_cache_key(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(docs.repartition(nf)).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "docs")
 
     out = tempfile.mkdtemp(prefix="q219_cdc_idx_")
     global _LAST_CDC_LANDED_DIR
@@ -1346,12 +1281,10 @@ def q220_streaming_emb_index_maintenance(
     centroid CTE after the unrolled flat rounds — exact at every driver
     scale, where the engine's switch also picks flat."""
     from ..functions.vectors import lsh_bucket_sql
-    from .dedup import NEW_MOD, NEW_REM
     from .emb_index import frozen_centroids
     from .similarity import DIM
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    is_new = (F.col("vec_id") % NEW_MOD) == NEW_REM
     # the frozen centroid table is the MATERIALIZED ingest artifact now
     # (emb_index.frozen_centroids, fingerprinted per fixture, referee-
     # switchable) — the Lloyd training no longer re-runs per invocation
@@ -1364,13 +1297,7 @@ def q220_streaming_emb_index_maintenance(
     # 12-file layout (the q218/q224 source shape): an unrepartitioned
     # write inherits the table's 32 reshard parts → 8 fixed-cost-dominated
     # micro-batches for a few thousand rows; 12 files = 3 batches
-    nf = stream_source_files()
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_newvecs{nf}_{_cache_key(sf_dir, 'embeddings')}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(emb.filter(is_new).repartition(nf)).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "newvecs")
 
     out = tempfile.mkdtemp(prefix="q220_emb_idx_")
     from ..functions.vectors import cosine_sql
@@ -1472,13 +1399,7 @@ def q224_streaming_maintain_and_compact(
     # per trigger every drain spans >= 3 micro-batches at ANY fixture
     # scale, so the in-stream compaction path is exercised by the
     # driver's correctness runs too, not only the probe tiers
-    nf = stream_source_files()
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_docs{nf}_{_cache_key(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        _source_writer(docs.repartition(nf)).mode("overwrite").parquet(src)
+    src = _stream_source(spark, sf_dir, "docs")
 
     landed_schema = f"chunk_hash string, {CDC_LANDED_PART_COL} string"
     landing = _GenerationLanding(
@@ -1620,12 +1541,10 @@ def q226_streaming_emb_maintain_and_compact(
         cosine_sql,
         lsh_bucket_sql,
     )
-    from .dedup import NEW_MOD, NEW_REM
     from .emb_index import frozen_centroids
     from .similarity import DIM
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    is_new = (F.col("vec_id") % NEW_MOD) == NEW_REM
     cent = frozen_centroids(spark, sf_dir).persist()
     # bounded 1-row scalar: the centroid count sizes the shared prefix
     # ONCE, outside batches (python twin of centroid_planes_sql,
@@ -1639,15 +1558,7 @@ def q226_streaming_emb_maintain_and_compact(
         F.expr(f"substring({cbits}, 1, {p_val})").alias("bk"),
     )
 
-    nf = stream_source_files()
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_newvecs{nf}_{_cache_key(sf_dir, 'embeddings')}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        emb.filter(is_new).repartition(nf).write.mode("overwrite").parquet(
-            src
-        )
+    src = _stream_source(spark, sf_dir, "newvecs")
 
     landing = _GenerationLanding(
         spark, "q226_emb_gen_", CDC_LANDED_PART_COL

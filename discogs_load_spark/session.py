@@ -9,12 +9,15 @@ a shuffle partition is ~128-512 MB at the target scale).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from .artifacts import publish_once, source_key
 
 _SHIPPED_APPS: set[str] = set()
 
@@ -97,6 +100,23 @@ def get_spark(
     return spark
 
 
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session conf ``{key: value}`` for the body of a ``with`` block
+    and restore each key's previous value (or unset it) on exit."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
     """Load the fixture parquet tables and register them as temp views.
 
@@ -170,8 +190,8 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
     At production scale inputs arrive as many files/row-groups and this
     path never triggers (files below 256 KB or already multi-group are
     returned unchanged). Row order is preserved (part k = rows [k*step,
-    (k+1)*step)), the cache key is (path, size, mtime), and the rewrite is
-    atomic (tmp dir + rename) so concurrent sessions share one cache.
+    (k+1)*step)), the cache key is the source_key of the file plus the part
+    count, and publish_once makes concurrent sessions share one copy.
     """
     import pyarrow.parquet as pq
 
@@ -183,28 +203,22 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
     if meta.num_row_groups >= min(cores, 4):
         return path
     nparts = min(cores, max(2, meta.num_rows // _RESHARD_MIN_ROWS_PER_PART))
-    import hashlib
+    dest = os.path.join(
+        tempfile.gettempdir(),
+        "discogs_load_shards",
+        f"{source_key(path)}_{nparts}",
+    )
 
-    key = hashlib.md5(
-        f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime_ns}:{nparts}".encode()
-    ).hexdigest()[:16]
-    dest = Path(tempfile.gettempdir()) / "discogs_load_shards" / key
-    if not dest.exists():
+    def write(tmp: str) -> None:
         table = pq.read_table(path)
         step = -(-table.num_rows // nparts)
-        tmp = dest.with_name(f"{key}.tmp.{os.getpid()}")
-        tmp.mkdir(parents=True, exist_ok=True)
+        os.makedirs(tmp)
         for i in range(nparts):
             chunk = table.slice(i * step, step)
             if chunk.num_rows:
-                pq.write_table(chunk, tmp / f"part-{i:05d}.parquet")
-        try:
-            tmp.rename(dest)
-        except OSError:  # another session won the race; its copy is complete
-            import shutil
+                pq.write_table(chunk, os.path.join(tmp, f"part-{i:05d}.parquet"))
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return str(dest)
+    return publish_once(dest, write)
 
 
 def _read_parquet_normalized(spark: SparkSession, path: str):

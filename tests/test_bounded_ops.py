@@ -11,6 +11,8 @@ import math
 import re
 from collections import defaultdict
 
+import pytest
+
 from discogs_load_spark.queries.registry import REGISTRY
 from discogs_load_spark.session import load_tables
 
@@ -590,3 +592,38 @@ def test_q186_collect_guard_trips_with_premise_message(spark, monkeypatch):
     monkeypatch.setattr(extra, "SKEW_CC_CAP", -1)
     with pytest.raises(RuntimeError, match="value-domain-bounded"):
         REGISTRY["q186_join_key_skew_profile"].fn(spark, SF_SMALL)
+
+
+@pytest.mark.parametrize(
+    "name,module,cap,exc",
+    [
+        ("q130_event_pagerank", "behavior", "PR_GRAPH_CAP", ValueError),
+        ("q165_entity_clusters", "dedup", "ENTITY_EDGE_CAP", ValueError),
+        ("q186_join_key_skew_profile", "extra", "SKEW_CC_CAP", RuntimeError),
+    ],
+)
+def test_collect_guard_fires_before_materializing(
+    spark, monkeypatch, name, module, cap, exc
+):
+    """The driver-collect guards exist to keep an over-cap frame off the
+    driver, so the guarded collect fetches at most CAP + 1 rows
+    (``limit(CAP + 1)``) and the guard fires on that, instead of
+    collecting the whole frame and comparing its length afterwards."""
+    import importlib
+
+    mod = importlib.import_module(f"discogs_load_spark.queries.{module}")
+    monkeypatch.setattr(mod, cap, 1)
+    df_cls = type(spark.range(1))
+    orig = df_cls.collect
+    sizes: list[int] = []
+
+    def spy(self):
+        rows = orig(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", spy)
+    with pytest.raises(exc) as err:
+        REGISTRY[name].fn(spark, SF_SMALL)
+    assert sizes and max(sizes) <= 2, sizes
+    assert "more than 1 " in str(err.value)

@@ -97,3 +97,13 @@ def test_per_batch_gate_catches_synthetic_regression():
 
     for name in bench.STREAMING_PER_BATCH:
         assert "streaming" in _REG[name].tags
+
+
+def test_readme_query_counts_match_registry():
+    """README's two suite-size statements equal the registry size (they
+    had drifted to 195 and 226 while the registry grew)."""
+    text = README.read_text()
+    pats = (r"query surface \((\d+) queries\)", r"Declared (\d+)-query suite")
+    counts = [int(n) for pat in pats for n in re.findall(pat, text)]
+    assert len(counts) == 2, counts
+    assert counts == [len(REGISTRY)] * 2, counts

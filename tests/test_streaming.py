@@ -490,3 +490,87 @@ def test_spark_read_pins_file_listing_before_append(spark, tmp_path):
         "landing append in queries/streaming.py (q219/q224 anti-join)"
     )
     assert spark.read.parquet(out).count() == 8
+
+
+def test_q226_builds_the_shared_newvec_source_with_sized_row_groups(
+    spark, tmp_path, monkeypatch
+):
+    """q220 and q226 share one cached new-vector stream source whose key
+    claims the STREAM_SOURCE_ROW_GROUP_BYTES layout, so whichever query
+    builds it first must write that layout: build it through q226's path
+    and check every row group of every file. The fixture is the sf0.001
+    embeddings replicated 30x and the source is one file, well over the
+    row-group size even as encoded; the frozen centroids and the landing
+    are stubbed out (only the source build is under test)."""
+    import glob
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from discogs_load_spark.queries import emb_index, streaming
+    from discogs_load_spark.queries.registry import REGISTRY
+
+    base = pq.read_table(f"{SF_SMALL}/embeddings.parquet")
+    assert base.column_names[0] == "vec_id"
+    n = base.num_rows
+    copies = [
+        base.set_column(0, "vec_id", pc.add(base.column("vec_id"), k * n))
+        for k in range(30)
+    ]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.concat_tables(copies), str(sf / "embeddings.parquet"))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_FILES", "1")
+
+    dim = len(base.column("embedding")[0])
+    monkeypatch.setattr(
+        emb_index,
+        "frozen_centroids",
+        lambda spark, sf_dir: spark.createDataFrame(
+            [(0, [1.0] * dim)], "cluster int, centroid array<double>"
+        ),
+    )
+
+    class SourceBuilt(Exception):
+        pass
+
+    def stop(*args, **kwargs):
+        raise SourceBuilt
+
+    monkeypatch.setattr(streaming, "_GenerationLanding", stop)
+    with pytest.raises(SourceBuilt):
+        REGISTRY["q226_streaming_emb_maintain_and_compact"].fn(spark, str(sf))
+
+    files = glob.glob(str(tmp_path / "stream_newvecs*" / "*.parquet"))
+    assert len(files) == 1, files
+    meta = pq.ParquetFile(files[0]).metadata
+    sizes = [meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)]
+    assert max(sizes) <= streaming.STREAM_SOURCE_ROW_GROUP_BYTES, sizes
+    # non-vacuous: one unsized row group would exceed the bound
+    assert sum(sizes) > streaming.STREAM_SOURCE_ROW_GROUP_BYTES, sizes
+
+
+def test_stream_drain_conf_scopes_and_restores_session_conf(spark):
+    """The drain scope (session.scoped_conf) sets its keys for the body
+    only: explicitly set keys get their old values back, unset keys are
+    unset again — also when the body raises."""
+    from discogs_load_spark.queries.streaming import (
+        STREAM_DRAIN_PARTITIONS,
+        _stream_drain_conf,
+    )
+
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled", nodata)
+    spark.conf.unset(nodata)
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before[nodata] is None
+    with pytest.raises(RuntimeError):
+        with _stream_drain_conf(spark, no_data_batches=False):
+            assert spark.conf.get(keys[0]) == STREAM_DRAIN_PARTITIONS
+            assert spark.conf.get(keys[1]) == "false"
+            assert spark.conf.get(nodata) == "false"
+            raise RuntimeError
+    assert {k: spark.conf.get(k, None) for k in keys} == before
